@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from inspectehr_spark.tables import string_table
+
 
 def ecdf(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Per-group empirical CDF at each observed value: F_g(v) =
@@ -73,9 +75,8 @@ def ks_pairwise(
     e = ecdf(df, group_col, value_col).persist()
     groups = _group_pairs(df, group_col, max_groups)
     pairs = [(a, b) for i, a in enumerate(groups) for b in groups[i + 1 :]]
-    spark = df.sparkSession
     pairs_df = F.broadcast(
-        spark.createDataFrame(pairs, f"group_a string, group_b string")
+        string_table(df.sparkSession, pairs, ("group_a", "group_b"))
     )
 
     ea = e.select(
@@ -149,8 +150,9 @@ def ks_pairwise_pandas(
 
     groups = _group_pairs(df, group_col, max_groups)
     pairs = [(a, b) for i, a in enumerate(groups) for b in groups[i + 1 :]]
-    spark = df.sparkSession
-    pairs_df = F.broadcast(spark.createDataFrame(pairs, "group_a string, group_b string"))
+    pairs_df = F.broadcast(
+        string_table(df.sparkSession, pairs, ("group_a", "group_b"))
+    )
     ta = pairs_df.join(e, pairs_df.group_a == e.g).select(
         "group_a", "group_b", F.lit("a").alias("side"), "v"
     )

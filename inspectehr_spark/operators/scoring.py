@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inspectehr_spark.tables import string_table
+
 
 def keep(df: DataFrame, failure_log: DataFrame, key: str = "doc_id") -> DataFrame:
     """Rows with no failure record — `left_anti` IS the keep primitive."""
@@ -108,8 +110,8 @@ def metrics(
             else tuple(c)
             for c in checks
         ]
-        check_dim = spark.createDataFrame(
-            rows, "check_code string, eval_code string, description string"
+        check_dim = string_table(
+            spark, rows, ("check_code", "eval_code", "description")
         )
     else:
         check_dim = failure_log.select(

@@ -3,7 +3,8 @@
 Stages (all declarative; Catalyst owns the physical plan):
 
   pages(url, warc_ts, html, text, lang)
-    │ resume: anti-join processed-partition manifest         (R/perform_evaluation.R:267-274 skip-list pattern)
+    │ resume: filter out the manifest's committed dates      (R/perform_evaluation.R:267-274 skip-list pattern)
+    │   (literal IN list → InSet hash lookup, evaluated in the JVM)
     │ salt: repartition on (salt) — giant-HTML skew guard
     ├─ map_extract_score(html)         → text_x, lang_pred, perplexity
     │     (ONE fused mapInArrow stage — html crosses the JVM⇄Python
@@ -23,7 +24,9 @@ Stages (all declarative; Catalyst owns the physical plan):
     └─ sinks: decisions / failures / metrics as ONE atomic snapshot
        transaction (sources/snapshots.py manifest commit — partitioned
        parquet with a bounded write salt, versioned: time travel +
-       rollback; Iceberg writeTo(...) on a real catalog)
+       rollback; Iceberg writeTo(...) on a real catalog). An Observation
+       on the decisions write yields the run report (rows, kept,
+       processed dates) with no job of its own.
 
 Scale notes: with the window strategy the only wide operation is the
 exact-dup exchange (128-bit hash-pair key; collision odds at 10^12 docs
@@ -37,7 +40,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from inspectehr_spark.sources.store import FileSnapshotStore, SnapshotStore
@@ -337,12 +340,18 @@ def run_pipeline(
     data directories are written invisibly first, then a single manifest
     publish makes them all visible together. A crash at ANY earlier point
     leaves nothing visible — no partial sink, no torn manifest — so resume
-    simply anti-joins the dates recorded in the latest committed manifest
-    and reprocesses the rest; orphaned uncommitted data dirs are inert
-    (never read) and reclaimable by an Iceberg-style orphan-file vacuum.
-    Every commit is also a VERSION: `read_sink(..., version=k)` time-
-    travels, and `snapshots.rollback` undoes a bad run without rewriting
-    history. Returns {"partitions_processed": k, "rows": n}.
+    simply filters out the dates recorded in the latest committed manifest
+    (a literal IN list, evaluated in the JVM) and reprocesses the rest;
+    orphaned uncommitted data dirs are inert (never read) and reclaimable
+    by an Iceberg-style orphan-file vacuum. Every commit is also a
+    VERSION: `read_sink(..., version=k)` time-travels, and
+    `snapshots.rollback` undoes a bad run without rewriting history.
+
+    The run report — rows, kept, dropped, the dates processed and the
+    phase timings up to the commit — is observed on the decisions write
+    (one Observation, no extra job) and committed as the manifest's
+    `extra["report"]`, so each version carries its own report. Returns
+    {"partitions_processed": k, "rows": n, "timings": {...}}.
     """
     if store is None:
         store = FileSnapshotStore(out_dir)
@@ -356,25 +365,25 @@ def run_pipeline(
         t0 = now
 
     # p_date must be a TOTAL key: a NULL warc_ts would otherwise yield a
-    # NULL partition id that never matches the resume anti-join (those
-    # rows would reprocess and re-append every run) and a None that
-    # poisons sorted() over the committed date set. Null dates land in an
-    # explicit sentinel partition instead.
+    # NULL partition id that never matches the resume filter (NOT IN is
+    # NULL for a NULL key, so those rows would be dropped — never
+    # processed) and a None that poisons sorted() over the committed date
+    # set. Null dates land in an explicit sentinel partition instead.
     pages = spark.read.parquet(pages_path).withColumn(
         "p_date",
         F.coalesce(F.to_date("warc_ts").cast("string"), F.lit("__no_date__")),
     )
 
     if resume:
-        done_dates = set(store.latest_extra().get("dates", []))
+        done_dates = store.latest_extra().get("dates", [])
         if done_dates:
-            done = spark.createDataFrame(
-                [(p,) for p in sorted(done_dates)], "p_date string"
-            )
-            pages = pages.join(F.broadcast(done), "p_date", "left_anti")
+            # The committed set is manifest-sized: a literal predicate
+            # (InSet past 10 dates) runs in the scan's codegen stage, with
+            # no driver-built table to ship and no broadcast job.
+            pages = pages.filter(~F.col("p_date").isin(sorted(done_dates)))
 
     # cheap emptiness probe (1 row) instead of an eager full distinct-count
-    # job — the partition count comes from the cached result at the end
+    # job — the counts come from the decisions write's Observation
     probe_empty = not pages.take(1)
     _mark("t_probe")
     if probe_empty:
@@ -443,7 +452,13 @@ def run_pipeline(
         else None
     )
     try:
-        decisions = decide(flagged, scrub_chain=scrub_chain)
+        report = Observation()
+        decisions = decide(flagged, scrub_chain=scrub_chain).observe(
+            report,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.col("keep").cast("long")).alias("kept"),
+            F.collect_set("p_date").alias("dates"),
+        )
         log = failure_log(flagged)
         mets = metrics_table(flagged)
 
@@ -476,24 +491,33 @@ def run_pipeline(
             "metrics", hint, partition_col="partition_id",
         )
         _mark("t_metrics")
-        n_rows = flagged.count()
+        # The counts and dates were observed on the decisions write, so they
+        # describe exactly the rows committed below; nothing recomputes
+        # `flagged`, whose lineage holds the resume filter against the prior
+        # manifest (a recompute after the commit would see its own output).
+        seen = report.get
         _mark("t_count")
-        # Collect the processed-partition ids BEFORE committing: flagged's
-        # lineage contains the resume anti-join against the prior manifest,
-        # so any recomputation after the commit would see its own output and
-        # report zero partitions (observed with a cold cache).
-        done = [r[0] for r in flagged.select("p_date").distinct().collect()]
+        done = sorted(seen["dates"])
+        n_rows, n_kept = seen["rows"], seen["kept"]
         # ONE atomic publish for all three sinks + the resume record
         store.commit_transaction(
             {"decisions": [rel_dec], "failures": [rel_log], "metrics": [rel_met]},
-            extra={"dates": done},
+            extra={
+                "dates": done,
+                "report": {
+                    "rows": n_rows,
+                    "kept": n_kept,
+                    "dropped": n_rows - n_kept,
+                    "dates": done,
+                    "timings": dict(t),
+                },
+            },
             keep_prior=True,
         )
         _mark("t_manifest")
-        n_parts = len(done)
     finally:
         cached.unpersist()
-    return {"partitions_processed": n_parts, "rows": n_rows, "timings": t}
+    return {"partitions_processed": len(done), "rows": n_rows, "timings": t}
 
 
 def read_sink(

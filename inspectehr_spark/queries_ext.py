@@ -12,6 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from inspectehr_spark.functions import codes
+from inspectehr_spark.tables import string_table
 from inspectehr_spark.tables import table as _t
 
 # --------------------------------------------------------------------------
@@ -146,9 +147,7 @@ def q_ks_drift(spark, sf_dir):
     ).persist()
     types = sorted(r[0] for r in ev.select("event_type").distinct().collect())
     pairs = [(a, b) for i, a in enumerate(types) for b in types[i + 1 :]]
-    pairs_df = F.broadcast(
-        spark.createDataFrame(pairs, "group_a string, group_b string")
-    )
+    pairs_df = F.broadcast(string_table(spark, pairs, ("group_a", "group_b")))
     ea = e.select(F.col("event_type").alias("group_a"), F.col("value").alias("v"), F.col("cdf").alias("cdf_a"))
     eb = e.select(F.col("event_type").alias("group_b"), F.col("value").alias("v"), F.col("cdf").alias("cdf_b"))
     left = pairs_df.join(ea, "group_a").select(

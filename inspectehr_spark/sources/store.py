@@ -25,7 +25,7 @@ semantics-identical without an Iceberg jar in this container):
 
 - staged rows land as writeTo-appends to ``<prefix>_<name>`` tagged
   with a uuid ``_commit_id`` column — present in storage, INVISIBLE to
-  readers (every read semi-joins the committed-id set);
+  readers (every read filters on the committed-id set);
 - ``commit_transaction`` appends ONE ROW to ``<prefix>__commits``
   carrying the full resolved manifest (version, per-table commit-id
   lists, extra JSON). A single-table append is the one operation every
@@ -250,12 +250,12 @@ class TableCatalogStore:
             raise FileNotFoundError(
                 f"table {name!r} empty at {self.prefix} v{m['version']}"
             )
-        data = spark.table(self._tbl(name))
-        # committed-id set is manifest-sized: broadcast semi-join, the
-        # data table is never shuffled
-        idf = spark.createDataFrame([(i,) for i in ids], "_commit_id string")
-        return data.join(F.broadcast(idf), "_commit_id", "left_semi").drop(
-            "_commit_id"
+        # committed-id set is manifest-sized: a literal IN filter (an InSet
+        # hash lookup past 10 ids), no join, no job to ship the id list
+        return (
+            spark.table(self._tbl(name))
+            .filter(F.col("_commit_id").isin(ids))
+            .drop("_commit_id")
         )
 
     def latest_extra(self) -> dict:

@@ -11,6 +11,24 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def string_table(
+    spark: SparkSession, rows: list[tuple], names: tuple[str, ...]
+) -> DataFrame:
+    """A driver-built literal table of string columns as a LocalRelation.
+
+    `spark.createDataFrame(<python list>)` plans a LogicalRDD: every
+    consumer (a broadcast, a cross join) starts a Python-worker job just
+    to read back rows the driver already holds. Built from an Arrow table
+    the rows are inlined in the plan and read without a job. An empty
+    `rows` gives an empty table with the same columns."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    return spark.createDataFrame(
+        pa.table({n: pa.array(c, pa.string()) for n, c in zip(names, cols)})
+    )
+
+
 def parallel_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition of an UNDER-PARALLEL input (guide §2.5,
     "input skew ... repartition immediately after the read").

@@ -435,6 +435,23 @@ def test_run_battery_surfaces_skipped_rules(spark):
         run_battery(df, [good, typo], strict=True)
 
 
+def test_ks_pair_table_is_local_relation(spark):
+    """The KS pair list is a LocalRelation (no Python-worker job to read
+    it back), and a single group yields an empty pair table, so both KS
+    variants return no rows."""
+    from inspectehr_spark.tables import string_table
+
+    pairs = string_table(spark, [("a", "b")], ("group_a", "group_b"))
+    empty = string_table(spark, [], ("group_a", "group_b"))
+    for t in (pairs, empty):
+        assert "LocalRelation" in t._jdf.queryExecution().analyzed().toString()
+        assert t.columns == ["group_a", "group_b"]
+    assert pairs.collect() == [("a", "b")] and empty.count() == 0
+    one = spark.createDataFrame([("g", 1.0), ("g", 2.0)], "g string, v double")
+    assert distribution.ks_pairwise(one, "g", "v").count() == 0
+    assert distribution.ks_pairwise_pandas(one, "g", "v").count() == 0
+
+
 def test_ks_pairwise_group_cap(spark):
     """O(G²) fan-out is refused beyond max_groups with a clear error, on
     both the distributed and the applyInPandas variant (VERDICT r2 #6)."""

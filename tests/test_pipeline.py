@@ -334,6 +334,142 @@ def test_null_warc_ts_resumes_cleanly(spark, tmp_path_factory):
     }
 
 
+def _write_pages(path, rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    url, ts, html, text, lang = (list(c) for c in zip(*rows))
+    pq.write_table(
+        pa.table({
+            "url": pa.array(url, pa.string()),
+            "warc_ts": pa.array(ts, pa.timestamp("us")),
+            "html": pa.array(html, pa.binary()),
+            "text": pa.array(text, pa.string()),
+            "lang": pa.array(lang, pa.string()),
+        }),
+        path,
+    )
+
+
+def _many_dates_pages(n_dates):
+    """Small corpus spread over `n_dates` days (row i on day i % n_dates),
+    with every 20th warc_ts NULL (the __no_date__ partition)."""
+    import datetime as dt
+
+    rows, _ = corpus.generate_pages(n=240, seed=7)
+    day0 = dt.datetime(2025, 1, 1, 12)
+    out = []
+    for i, (url, _ts, html, text, lang) in enumerate(rows):
+        ts = None if i % 20 == 0 else day0 + dt.timedelta(days=i % n_dates)
+        out.append((url, ts, html, text, lang))
+    return out
+
+
+def _p_date(ts):
+    return "__no_date__" if ts is None else ts.date().isoformat()
+
+
+def test_resume_past_inset_threshold(spark, tmp_path):
+    """More than 10 committed dates (Catalyst's InSet threshold), the
+    __no_date__ sentinel among them: a resume processes exactly the
+    uncommitted dates — late rows of a committed date stay skipped — and
+    a third run processes nothing and commits nothing."""
+    from inspectehr_spark.sources import snapshots as snap
+
+    rows = _many_dates_pages(16)
+    old = {_p_date(r[1]) for r in rows[:160]} - {"2025-01-13", "2025-01-14",
+                                                "2025-01-15", "2025-01-16"}
+    first = [r for r in rows[:160] if _p_date(r[1]) in old]
+    second = [r for r in rows if r not in first]
+    new = {_p_date(r[1]) for r in second} - old
+    assert len(old) == 13 and "__no_date__" in old and len(new) == 4
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    inp.mkdir()
+    _write_pages(str(inp / "a.parquet"), first)
+    s1 = run_pipeline(spark, str(inp), out, resume=True)
+    assert s1["partitions_processed"] == 13 and s1["rows"] == len(first)
+
+    _write_pages(str(inp / "b.parquet"), second)
+    s2 = run_pipeline(spark, str(inp), out, resume=True)
+    assert s2["partitions_processed"] == len(new)
+    assert s2["rows"] == sum(_p_date(r[1]) in new for r in second)
+    assert snap.latest_extra(out)["report"]["dates"] == sorted(new)
+
+    v = snap.latest_version(out)
+    s3 = run_pipeline(spark, str(inp), out, resume=True)
+    assert s3["partitions_processed"] == 0 and s3["rows"] == 0
+    assert snap.latest_version(out) == v
+    got = read_sink(spark, out, "decisions").select("url").collect()
+    late = [r for r in second if _p_date(r[1]) in old]
+    assert late and len(got) == len(rows) - len(late)
+
+
+def test_run_report_matches_decisions(spark, tmp_path):
+    """The committed run report (extra["report"]) is observed on the
+    decisions write: its rows/kept/dropped equal that version's decisions
+    for the dates it processed, and each version keeps its own report (a
+    rollback to v1 brings v1's report back)."""
+    from pyspark.sql import functions as F
+
+    from inspectehr_spark.sources import snapshots as snap
+    from inspectehr_spark.sources.store import FileSnapshotStore
+
+    rows = _many_dates_pages(6)
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    inp.mkdir()
+    store = FileSnapshotStore(out)
+    early = [r for r in rows if r[1] is None or r[1].day <= 3]
+    late = [r for r in rows if r not in early]
+    reports = []
+    for version, shard in enumerate((early, late), start=1):
+        _write_pages(str(inp / f"part-{version}.parquet"), shard)
+        stats = run_pipeline(spark, str(inp), out, resume=True, store=store)
+        rep = store.latest_extra()["report"]
+        dec = read_sink(spark, out, "decisions", version=version).filter(
+            F.col("p_date").isin(rep["dates"])
+        )
+        assert rep["rows"] == stats["rows"] == len(shard) == dec.count()
+        assert 0 < rep["kept"] == dec.filter("keep").count() < rep["rows"]
+        assert rep["dropped"] == rep["rows"] - rep["kept"]
+        assert len(rep["dates"]) == stats["partitions_processed"]
+        assert {"t_probe", "t_decisions", "t_count"} <= rep["timings"].keys()
+        reports.append(rep)
+    assert store.latest_extra()["dates"] == sorted(
+        reports[0]["dates"] + reports[1]["dates"]
+    )
+    snap.rollback(out, to_version=1)
+    assert store.latest_extra()["report"] == reports[0]
+
+
+def test_resume_starts_no_extra_jobs(spark, tmp_path):
+    """A resume that processes new dates starts no more Spark jobs than
+    the batch run, plus one: the take(1) emptiness probe may scan a second
+    round of partitions when the first holds only committed dates. The
+    committed-date skip is a literal filter (no driver-built table to
+    broadcast) and the counts come from the decisions write."""
+    sc = spark.sparkContext
+    rows = _many_dates_pages(12)
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    inp.mkdir()
+    _write_pages(str(inp / "a.parquet"), [r for r in rows if r[1] is None
+                                          or r[1].day <= 8])
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            stats = run_pipeline(spark, str(inp), out, resume=True, salt_partitions=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert stats["partitions_processed"] > 0
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    batch = jobs("test-resume-jobs-batch")
+    _write_pages(str(inp / "b.parquet"), [r for r in rows if r[1] is not None
+                                          and r[1].day > 8])
+    resume = jobs("test-resume-jobs-resume")
+    assert resume <= batch + 1, (batch, resume)
+
+
 def test_ci_pattern_robust_terms():
     """_ci handles real-moderation-list shapes: mixed case normalizes,
     metacharacters and case-unstable letters escape literally."""
