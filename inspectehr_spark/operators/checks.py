@@ -60,14 +60,6 @@ TS_DEFAULT_LO = "1900-01-01 00:00:00"
 TS_DEFAULT_HI = "2100-01-01 00:00:00"
 
 
-def temporal_violation(col: Column, lo: str = TS_DEFAULT_LO, hi: Column | None = None) -> Column:
-    """TRUE iff timestamp outside [lo, hi] (hi defaults to the pinned
-    TS_DEFAULT_HI spec constant — deterministic, never wall-clock).
-    Reference: evaluate_range.date/datetime_1d, R/evaluate_ranges.R:282-367."""
-    hi = hi if hi is not None else F.lit(TS_DEFAULT_HI).cast("timestamp")
-    return col.isNotNull() & ~col.between(F.lit(lo).cast("timestamp"), hi)
-
-
 def metadata_violation(meta_cols: list[str]) -> Column:
     """TRUE iff ANY metadata column is NULL.
     Reference: evaluate_metadata, R/evaluate_metadata.R:14-35."""

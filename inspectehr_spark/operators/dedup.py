@@ -16,7 +16,7 @@ documents. Staging makes them once-per-row bound references.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -69,22 +69,120 @@ def with_shingles(
     return staged.withColumn(out_col, sh).drop("_toks", "_grams")
 
 
-def with_minhash_signature(
+def _check_hash_fn(hash_fn: str) -> None:
+    """`hash_fn` picks the hash family of a sketch: "md5" is the
+    engine-replayable family (DuckDB computes the same values, so the
+    registry's oracle checks the very operator the scale path runs);
+    "xxhash64" is the cheaper deployment family (one 64-bit hash instead
+    of an md5 + hex-slice). The query semantics are the same under both."""
+    if hash_fn not in ("xxhash64", "md5"):
+        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+
+
+def minhash_signature(
     df: DataFrame,
-    shingle_col: str = "shingles",
-    out_col: str = "sig",
-    num_hashes: int = 64,
+    num_hashes: int,
+    hash_fn: str = "xxhash64",
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    ngram: int = 3,
 ) -> DataFrame:
-    """Add an array<long> MinHash signature: h_i(x) = xxhash64(x, seed=i),
-    signature[i] = min over shingles. array_min(transform(...)) per hash,
-    over a materialized shingle column — JVM-side only."""
-    sh = F.col(shingle_col)
+    """(id_col, _sig) — MinHash signature over the word `ngram`-grams of
+    `text_col`, one element per hash i:
 
-    def perm_min(i: int):
-        return F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(i))))
+    * xxhash64: min over grams of xxhash64(xxhash64(gram), i)  (array<long>)
+    * md5:      lexicographic min of md5(gram || '|i')          (array<string>)
 
-    return df.withColumn(
-        out_col, F.array(*[perm_min(i) for i in range(num_hashes)])
+    Tokens split on single spaces, empty tokens dropped — the tokenizer
+    the DuckDB replay pins. Docs with fewer than `ngram` tokens have no
+    grams and are absent (in both engines), so they can never share a
+    degenerate all-null signature bucket.
+
+    Shape: the input scan is parallelized first (tables.parallel_scan — a
+    small table is one file split, so the per-gram hash work would run on
+    a single core), then one projection of `num_hashes`
+    array_min(transform(...)) over the staged gram column: zero shuffles."""
+    from inspectehr_spark.functions.textfns import word_ngrams
+    from inspectehr_spark.tables import parallel_scan
+
+    _check_hash_fn(hash_fn)
+    staged = (
+        parallel_scan(df.select(id_col, text_col))
+        .withColumn("_toks", F.array_remove(F.split(F.col(text_col), " "), ""))
+        # the optimizer pushes this filter below the round-robin exchange,
+        # re-evaluating the tokenizer on the scan core: keep both cheap
+        # (array_remove, no lambda; a filter on the grams measured slower)
+        .filter(F.size("_toks") >= ngram)
+        .withColumn("_grams", word_ngrams(F.col("_toks"), ngram))
+    )
+    if hash_fn == "xxhash64":
+        staged = staged.withColumn(
+            "_grams", F.transform("_grams", lambda g: F.xxhash64(g))
+        )
+
+        def h(i: int):
+            return lambda g: F.xxhash64(g, F.lit(i))
+    else:
+
+        def h(i: int):
+            return lambda g: F.md5(F.concat(g, F.lit(f"|{i}")))
+
+    sig = F.array(
+        *[F.array_min(F.transform("_grams", h(i))) for i in range(num_hashes)]
+    )
+    return staged.select(id_col, sig.alias("_sig"))
+
+
+def minhash_band_hashes(
+    sig: str, num_hashes: int, bands: int, hash_fn: str = "xxhash64"
+) -> Column:
+    """array<struct<band_id int, band_hash>> of the `bands` LSH band keys
+    of signature column `sig`: xxhash64 of the band's slice (BIGINT), or
+    md5 of its concatenated elements (the replayable family)."""
+    _check_hash_fn(hash_fn)
+    rows = num_hashes // bands
+
+    def band_hash(b: int) -> Column:
+        part = F.slice(F.col(sig), b * rows + 1, rows)
+        return F.xxhash64(part) if hash_fn == "xxhash64" else F.md5(
+            F.concat_ws("", part)
+        )
+
+    return F.array(
+        *[
+            F.struct(F.lit(b).alias("band_id"), band_hash(b).alias("band_hash"))
+            for b in range(bands)
+        ]
+    )
+
+
+def _capped_band_pairs(
+    banded: DataFrame, band_key: str, bucket_cap: int, *pair_cols: Column
+) -> DataFrame:
+    """Candidate pairs of a banded LSH index (doc_id, band_id, `band_key`,
+    payload): every (band_id, band_key) bucket is capped at `bucket_cap`
+    docs by doc_id order (hot boilerplate buckets can never turn the join
+    into an O(n²) cross product), then a keyed equi self-join on the
+    bucket gives (doc_id_a, doc_id_b, *pair_cols), a < b, one row per pair.
+    `pair_cols` read the two sides as "a.<col>" / "b.<col>"."""
+    wb = Window.partitionBy("band_id", band_key).orderBy("doc_id")
+    capped = banded.withColumn("_rn", F.row_number().over(wb)).filter(
+        F.col("_rn") <= bucket_cap
+    )
+    a, b = capped.alias("a"), capped.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col(f"a.{band_key}") == F.col(f"b.{band_key}"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
+            *pair_cols,
+        )
+        .dropDuplicates(["doc_id_a", "doc_id_b"])
     )
 
 
@@ -97,73 +195,32 @@ def minhash_lsh_duplicates(
     ngram: int = 3,
     jaccard_threshold: float = 0.8,
     bucket_cap: int = 64,
+    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH.
 
-    shingle → signature → `bands` band hashes → candidate pairs share
+    signature → `bands` band hashes → candidate pairs share
     (band_id, band_hash) → verify estimated Jaccard (signature agreement
     fraction) ≥ threshold. Returns (doc_id_a, doc_id_b, est_jaccard), a < b.
 
     Scale: the only shuffles are the band-key self-join and the final
     dedup; both keyed equi-ops. Hot buckets (boilerplate) are capped at
-    `bucket_cap` docs via row_number — the cap is logged at the metrics
-    layer in a real run, never silent-dropped without trace.
-    """
-    rows_per_band = num_hashes // bands
-    from inspectehr_spark.tables import parallel_scan
-
-    # NOTE r7: the md5 twin's PERSIST was also tried here and measured ~2x
-    # SLOWER at sf0.1 (the xxhash64 sketch is cheap enough that the cache
-    # build costs more than the double-compute it avoids) — only the scan
-    # parallelization is kept (at staged sf1 the single-core sketch was
-    # the dominant cost: 12.7 s of the query's 12.7 s).
-    sigs = with_minhash_signature(
-        with_shingles(
-            parallel_scan(df.select(F.col(id_col).alias("doc_id"), text_col)),
-            text_col=text_col, n=ngram,
-        ),
-        num_hashes=num_hashes,
-    ).select("doc_id", "sig")
-
+    `bucket_cap` docs via row_number. Nothing is persisted, so the query
+    leaves no cached data behind."""
+    sigs = minhash_signature(
+        df.select(F.col(id_col).alias("doc_id"), text_col),
+        num_hashes, hash_fn, text_col=text_col, ngram=ngram,
+    )
     banded = sigs.select(
         "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.band_hash")
-
-    wb = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
-    banded = banded.withColumn("_rn", F.row_number().over(wb)).filter(
-        F.col("_rn") <= bucket_cap
-    )
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
+        "_sig",
+        F.explode(minhash_band_hashes("_sig", num_hashes, bands, hash_fn)).alias(
+            "band"
+        ),
+    ).select("doc_id", "_sig", "band.band_id", "band.band_hash")
+    pairs = _capped_band_pairs(
+        banded, "band_hash", bucket_cap,
+        F.col("a._sig").alias("sig_a"), F.col("b._sig").alias("sig_b"),
     )
     est = (
         F.size(
@@ -184,24 +241,35 @@ def with_simhash(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "simhash",
-    bits: int = 64,
+    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Add a 64-bit SimHash over word tokens, pure SQL, in ONE aggregate
-    pass: the accumulator is an array<int>(bits) of per-bit ±1 vote tallies
-    updated via zip_with, then the bit votes fold into the fingerprint long.
+    """Add a 64-bit SimHash over word tokens (split on whitespace runs),
+    pure SQL, in ONE aggregate pass: the accumulator is an array<int>(64)
+    of per-bit ±1 vote tallies updated via zip_with, then the bit votes
+    fold into the fingerprint long.
 
-    Round-1 shape evaluated `bits` independent aggregates (O(bits·n_tokens)
-    array traversals per row and a 64-term codegen giant — the slowest
-    bench query); this traverses the token hashes once (VERDICT r1 #5).
-    Fingerprints are bit-identical to the old formulation (majority vote
-    ties → bit 0, null/empty token lists → 0)."""
-    staged = df.withColumn("_toks", F.split(F.col(text_col), r"\s+")).withColumn(
-        "_th", F.transform(F.col("_toks"), lambda t: F.xxhash64(t))
-    )
-    bit_positions = F.sequence(F.lit(0), F.lit(bits - 1))
+    Token hash: xxhash64(t), or with "md5" the first 16 hex chars of
+    md5(t) as a long, (conv(md5[1:8]) << 32) | conv(md5[9:16]) — DuckDB
+    replays it verbatim via ('0x'||substring(md5(t),1|9,8))::BIGINT.
+    Vote ties → bit 0; null token lists → 0."""
+    _check_hash_fn(hash_fn)
+    staged = df.withColumn("_toks", F.split(F.col(text_col), r"\s+"))
+    if hash_fn == "xxhash64":
+        th = F.transform("_toks", lambda t: F.xxhash64(t))
+    else:
+
+        def half(m: Column, pos: int) -> Column:
+            return F.conv(F.substring(m, pos, 8), 16, 10).cast("long")
+
+        th = F.transform(
+            F.transform("_toks", lambda t: F.md5(t)),
+            lambda m: F.shiftleft(half(m, 1), 32).bitwiseOR(half(m, 9)),
+        )
+    staged = staged.withColumn("_th", th)
+    bit_positions = F.sequence(F.lit(0), F.lit(63))
     votes = F.aggregate(
         F.col("_th"),
-        F.array_repeat(F.lit(0), bits),
+        F.array_repeat(F.lit(0), 64),
         lambda acc, h: F.zip_with(
             acc,
             F.transform(
@@ -217,7 +285,7 @@ def with_simhash(
         v = 1 << b
         return v - (1 << 64) if v >= (1 << 63) else v
 
-    pow2 = F.array(*[F.lit(signed_pow2(b)).cast("long") for b in range(bits)])
+    pow2 = F.array(*[F.lit(signed_pow2(b)).cast("long") for b in range(64)])
     fp = F.aggregate(
         F.zip_with(
             F.col("_votes"),
@@ -232,92 +300,27 @@ def with_simhash(
     ).drop("_toks", "_th", "_votes")
 
 
-def with_simhash_replayable(
-    df: DataFrame,
-    text_col: str = "text",
-    hi_col: str = "fp_hi",
-    lo_col: str = "fp_lo",
-) -> DataFrame:
-    """64-bit SimHash with ENGINE-REPLAYABLE token hashes: the token hash
-    is the first 16 hex chars of md5(token), carried as two 32-bit halves
-    (`hi_col` bits 63..32, `lo_col` bits 31..0) so every value fits a
-    signed BIGINT in any engine — DuckDB replays it verbatim via
-    ``('0x'||substring(md5(t),1,8))::BIGINT`` (cross-checked against
-    Spark's conv(substring(md5),16,10) on fixtures).
-
-    Same single-pass vote shape as `with_simhash` (one traversal of the
-    token hashes, zip_with accumulator — the VERDICT r1 #5 form), same
-    tie/empty semantics (vote ties → bit 0, null token lists → 0/0).
-    `with_simhash` (xxhash64) stays the scale path: one 64-bit hash per
-    token instead of an md5 + two string-slice conversions. This variant
-    exists so the simhash REGISTRY queries get full DuckDB value oracles
-    (the md5-minhash treatment, queries_episodes.q_minhash_band_signature)."""
-    staged = df.withColumn("_toks", F.split(F.col(text_col), r"\s+"))
-    staged = staged.withColumn(
-        "_md5", F.transform(F.col("_toks"), lambda t: F.md5(t))
-    )
-    staged = staged.withColumn(
-        "_th",
-        F.transform(
-            F.col("_md5"),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("hi"),
-                F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("lo"),
-            ),
-        ),
-    )
-    bit_positions = F.sequence(F.lit(0), F.lit(63))
-    votes = F.aggregate(
-        F.col("_th"),
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                bit_positions,
-                lambda b: F.when(
-                    F.when(b < 32, F.getbit(h["lo"], b))
-                    .otherwise(F.getbit(h["hi"], b - 32)) == 1,
-                    1,
-                ).otherwise(-1),
-            ),
-            lambda a, d: a + d,
-        ),
-    )
-    staged = staged.withColumn("_votes", votes)
-
-    def _fold(offset: int):
-        pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(32)])
-        return F.aggregate(
-            F.zip_with(
-                F.slice(F.col("_votes"), offset + 1, 32),
-                pow2,
-                lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    return (
-        staged.withColumn(lo_col, F.coalesce(_fold(0), F.lit(0).cast("long")))
-        .withColumn(hi_col, F.coalesce(_fold(32), F.lit(0).cast("long")))
-        .drop("_toks", "_md5", "_th", "_votes")
-    )
-
-
-def simhash_hamming_pairs_replayable(
+def simhash_hamming_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
     chunks: int = 4,
     bucket_cap: int = 64,
+    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """`simhash_hamming_pairs` over the REPLAYABLE (md5 split-half)
-    simhash: identical banding/pigeonhole/cap/verify structure, fingerprint
-    carried as (hi, lo) 32-bit halves so DuckDB replays every step —
-    hamming = bit_count(xor(hi)) + bit_count(xor(lo)). See
-    `simhash_hamming_pairs` for the scheme; this backs the value-checked
-    registry query."""
+    """Near-duplicate pairs by SimHash banding: the 64-bit fingerprint
+    splits into `chunks` equal bands; by pigeonhole any pair within
+    `max_hamming` < `chunks` bit flips agrees on at least one band, so
+    candidates = pairs sharing (band_id, band_value) — a keyed equi
+    self-join, never the O(n²) cross product (same capped banding as
+    minhash_lsh_duplicates). Verification is exact:
+    bit_count(a XOR b) <= max_hamming, JVM-side.
+
+    Returns (doc_id_a, doc_id_b, hamming), a < b. The input scan is
+    parallelized before the per-row vote math (tables.parallel_scan)."""
+    from inspectehr_spark.tables import parallel_scan
+
     if not 0 < chunks <= 64 or 64 % chunks:
         raise ValueError("chunks must divide 64")
     if max_hamming >= chunks:
@@ -326,58 +329,34 @@ def simhash_hamming_pairs_replayable(
             f"(got {max_hamming} >= {chunks})"
         )
     bandw = 64 // chunks
-    if bandw > 32 or 32 % bandw:
-        raise ValueError("band width must divide the 32-bit halves")
     mask = (1 << bandw) - 1
-    per_half = 32 // bandw
-    from inspectehr_spark.tables import parallel_scan
-
-    # r7: parallelize the one-file scan before the per-row vote math, and
-    # persist the (two-longs-per-doc) fingerprint table because the banded
-    # self-join consumes it on both sides — the broadcast side defeats
-    # exchange reuse, so without the persist the sketch computed twice
-    sh = with_simhash_replayable(
-        parallel_scan(df.select(id_col, text_col)), text_col=text_col
-    ).select(F.col(id_col).alias("doc_id"), "fp_hi", "fp_lo").persist()
-
-    def _band(b: int):
-        half = F.col("fp_lo") if b < per_half else F.col("fp_hi")
-        shift = (b % per_half) * bandw
-        return F.struct(
-            F.lit(b).alias("band_id"),
-            F.shiftrightunsigned(half, shift).bitwiseAND(F.lit(mask)).alias(
-                "band_val"
-            ),
-        )
-
+    sh = with_simhash(
+        parallel_scan(df.select(id_col, text_col)),
+        text_col=text_col,
+        hash_fn=hash_fn,
+    ).select(F.col(id_col).alias("doc_id"), "simhash")
     banded = sh.select(
         "doc_id",
-        "fp_hi",
-        "fp_lo",
-        F.explode(F.array(*[_band(b) for b in range(chunks)])).alias("band"),
-    ).select("doc_id", "fp_hi", "fp_lo", "band.band_id", "band.band_val")
-
-    wb = Window.partitionBy("band_id", "band_val").orderBy("doc_id")
-    banded = banded.withColumn("_rn", F.row_number().over(wb)).filter(
-        F.col("_rn") <= bucket_cap
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            (
-                F.bit_count(F.col("a.fp_hi").bitwiseXOR(F.col("b.fp_hi")))
-                + F.bit_count(F.col("a.fp_lo").bitwiseXOR(F.col("b.fp_lo")))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
+        "simhash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_id"),
+                        F.shiftrightunsigned("simhash", b * bandw)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("band_val"),
+                    )
+                    for b in range(chunks)
+                ]
+            )
+        ).alias("band"),
+    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
+    pairs = _capped_band_pairs(
+        banded, "band_val", bucket_cap,
+        F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
+            "hamming"
+        ),
     )
     return pairs.filter(F.col("hamming") <= max_hamming)
 
@@ -391,17 +370,17 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate (doc_id_a, doc_id_b) pairs:
     |A∩B| / |A∪B| over distinct shingle sets via array_intersect/union.
-    r7: shingle construction runs over a parallelized scan (a one-file
-    input otherwise hashes every gram on a single core; tables.parallel_scan)
-    and the shingle table is persisted — both joins consume it, and the
-    broadcast side would otherwise recompute the gram pass."""
+    Shingle construction runs over a parallelized scan (a one-file input
+    otherwise hashes every gram on a single core; tables.parallel_scan).
+    Both joins consume the shingle table; it is not persisted, so the
+    query leaves no cached data behind."""
     from inspectehr_spark.tables import parallel_scan
 
     sh = with_shingles(
         parallel_scan(df.select(F.col(id_col).alias("doc_id"), text_col)),
         text_col=text_col,
         n=ngram,
-    ).select("doc_id", F.array_distinct("shingles").alias("sh")).persist()
+    ).select("doc_id", F.array_distinct("shingles").alias("sh"))
     return (
         candidate_pairs
         .join(sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a")), "doc_id_a")
@@ -420,97 +399,6 @@ def ngram_jaccard_pairs(
             .alias("jaccard"),
         )
     )
-
-
-def with_dup_ngram_fraction(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "dup_ngram_frac",
-    n: int = 3,
-) -> DataFrame:
-    """Add the within-document duplicated n-gram fraction (Gopher
-    repetition rule): 1 - distinct/total over word n-grams."""
-    staged = with_shingles(df, text_col=text_col, out_col="_sh", n=n)
-    total = F.size(F.col("_sh"))
-    frac = F.when(
-        total > 0,
-        F.round(1.0 - F.size(F.array_distinct(F.col("_sh"))) / total, 6),
-    ).otherwise(F.lit(0.0))
-    return staged.withColumn(out_col, frac).drop("_sh")
-
-
-def simhash_hamming_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    chunks: int = 4,
-    bucket_cap: int = 64,
-) -> DataFrame:
-    """Near-duplicate pairs by SimHash banding: the 64-bit fingerprint
-    splits into `chunks` equal bands; by pigeonhole any pair within
-    `max_hamming` < `chunks` bit flips agrees on at least one band, so
-    candidates = pairs sharing (band_id, band_value) — a keyed equi
-    self-join, never the O(n²) cross product (same banding scheme as the
-    MinHash LSH join above). Verification is exact:
-    bit_count(a XOR b) <= max_hamming, JVM-side.
-
-    Returns (doc_id_a, doc_id_b, hamming), a < b. Hot bands (boilerplate
-    fingerprints) are capped at `bucket_cap` docs via row_number, as in
-    minhash_lsh_duplicates.
-    """
-    if not 0 < chunks <= 64 or 64 % chunks:
-        raise ValueError("chunks must divide 64")
-    if max_hamming >= chunks:
-        raise ValueError(
-            "pigeonhole guarantee needs max_hamming < chunks "
-            f"(got {max_hamming} >= {chunks})"
-        )
-    bandw = 64 // chunks
-    mask = (1 << bandw) - 1
-    sh = with_simhash(df.select(id_col, text_col), text_col=text_col).select(
-        F.col(id_col).alias("doc_id"), "simhash"
-    )
-    banded = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftrightunsigned("simhash", b * bandw)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for b in range(chunks)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-
-    wb = Window.partitionBy("band_id", "band_val").orderBy("doc_id")
-    banded = banded.withColumn("_rn", F.row_number().over(wb)).filter(
-        F.col("_rn") <= bucket_cap
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def contamination_flags(
@@ -571,60 +459,6 @@ def contamination_flags(
             (F.coalesce("n_hits", F.lit(0)) >= min_hits).alias("contaminated"),
         )
     )
-
-
-def md5_minhash_signature(
-    df: DataFrame,
-    num_hashes: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram: int = 3,
-) -> DataFrame:
-    """(id_col, _sig array<string>[num_hashes]) — MinHash signature with
-    ENGINE-REPLAYABLE hashes: h_i(gram) = md5(gram || '|i'), element =
-    lexicographic min over the doc's word n-grams. Docs with < `ngram`
-    tokens have no shingles and are absent (same in the DuckDB replay).
-    Requires `id_col` to be unique per document (it keys the aggregation).
-
-    This is the shared construction behind the `minhash_band_signature`
-    and `minhash_lsh_pairs` value oracles (the xxhash64 operators above
-    stay the scale path — one 64-bit hash per gram beats an md5 +
-    hex-slice).
-
-    Shape (r7): same ONE-aggregate-pass accumulator as r5/r6 (num_hashes
-    running minima folded via zip_with/least; 'g' sorts after every hex
-    digit so it is the identity; the nested-lambda form avoids the
-    `lambda g, i=i:` two-parameter HOF capture trap) — but the input scan
-    is now PARALLELIZED first (tables.parallel_scan): a small table is one
-    file split, so the grams x num_hashes interpreted md5 calls all ran on
-    a single core. Alternatives measured at sf0.1/local[32] and rejected:
-    a 32-column codegen min() aggregation (explode + flat md5 projections)
-    pays ~4 s of agg codegen+exec and a doc-keyed exchange (7.7 s cold vs
-    3.5 s here); a fully-exploded (gram, salt) min pays a 48M-row explode
-    (34 s). The zero-shuffle projection stays the best shape — it just
-    needed the scan width fixed."""
-    from inspectehr_spark.functions.textfns import word_ngrams
-    from inspectehr_spark.tables import parallel_scan
-
-    staged = parallel_scan(df.select(id_col, text_col)).withColumn(
-        "_toks", F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    )
-    staged = staged.withColumn(
-        "_grams", word_ngrams(F.col("_toks"), ngram)
-    ).filter(F.size("_grams") > 0)
-
-    def _md5s(g):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.md5(F.concat(g, F.lit("|"), i.cast("string"))),
-        )
-
-    sig_arr = F.aggregate(
-        F.col("_grams"),
-        F.array_repeat(F.lit("g"), num_hashes),
-        lambda acc, g: F.zip_with(acc, _md5s(g), lambda a, m: F.least(a, m)),
-    )
-    return staged.withColumn("_sig", sig_arr).select(id_col, "_sig")
 
 
 def shingle_dup_coverage(
@@ -729,13 +563,12 @@ def substring_dup_stats(
     key (exchange reused) → doc-keyed agg. The shuffle key is the window
     hash, never the text. `hash_fn="md5"` is the oracle-replay contract;
     "xxhash64" halves shuffle width (BIGINT key) for deployments — the
-    same twin pattern as minhash_lsh_pairs_fast.
+    same `hash_fn` parameter as the MinHash and SimHash operators.
 
     Reference analog: R/evaluate_duplication.R flags only coincident-key
     duplicates; cross-document verbatim spans are the web-corpus
     generalization (SURVEY §8)."""
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+    _check_hash_fn(hash_fn)
     L = F.length(F.col(text_col))
     pos = F.when(
         L >= window, F.sequence(F.lit(1), L - (window - 1), F.lit(hop))

@@ -26,9 +26,9 @@ Scale shape (the whole point of hashed features):
   operators/sampling.py);
 * n-gram → bucket uses the md5 hex-slice replay contract
   (conv(substring(md5(g),1,8),16,10) % B on Spark,
-  ('0x'||substr(md5(g),1,8))::BIGINT % B in DuckDB) — swap in xxhash64
-  for a deployment (same geometry, half the hash cost; the
-  minhash_lsh_pairs_fast twin pattern).
+  ('0x'||substr(md5(g),1,8))::BIGINT % B in DuckDB). xxhash64 would
+  halve the hash cost at the same geometry; add it as a `hash_fn`
+  parameter (as in operators/dedup.py) if a caller ever needs it.
 
 Smoothing is add-one over buckets: p(b) = (cnt_b + 1) / (total + B), so
 buckets unseen in the target contribute a uniform negative evidence

@@ -122,20 +122,6 @@ def periodicity_failures(
     )
 
 
-def max_gap(df: DataFrame, entity_col: str, ts_col: str) -> DataFrame:
-    """Per-entity maximum inter-event gap in hours (lead-based periodicity
-    core, reference R/evaluate_periodicity.R:70-80)."""
-    w = Window.partitionBy(entity_col).orderBy(ts_col)
-    gap = (
-        F.unix_timestamp(F.lead(ts_col).over(w).cast("timestamp")) - F.unix_timestamp(F.col(ts_col).cast("timestamp"))
-    ) / 3600.0
-    return (
-        df.withColumn("_gap", gap)
-        .groupBy(entity_col)
-        .agg(F.max("_gap").alias("max_gap_hours"))
-    )
-
-
 def chronology_violations(
     df: DataFrame,
     entity_col: str,

@@ -573,34 +573,22 @@ MINHASH_NUM, MINHASH_BANDS = 16, 4
 def q_minhash_band_signature(spark, sf_dir):
     """MinHash banded signature with ENGINE-REPLAYABLE hashes: h_i(gram) =
     md5(gram || '|i'), signature element = lexicographic min per i, band
-    hash = md5 of its 4 concatenated elements. Same shingle → minhash →
-    band pipeline shape as dedup.minhash_lsh_duplicates (which uses
-    xxhash64 — engine-specific, rows-only checked); this variant gives the
-    dedup path a full DuckDB value oracle. Docs with < 3 tokens have no
-    shingles and are absent (both engines). Signature construction (and
-    its HOF lambda-capture trap) lives in dedup.md5_minhash_signature,
-    shared with the `minhash_lsh_pairs` oracle."""
-    from inspectehr_spark.operators.dedup import md5_minhash_signature
+    hash = md5 of its 4 concatenated elements. The signature and band keys
+    are dedup.minhash_signature / dedup.minhash_band_hashes with
+    hash_fn="md5" — the construction dedup.minhash_lsh_duplicates runs —
+    so this gives the dedup path a full DuckDB value oracle. Docs with < 3
+    tokens have no shingles and are absent (both engines)."""
+    from inspectehr_spark.operators.dedup import (
+        minhash_band_hashes,
+        minhash_signature,
+    )
 
     docs = _t(spark, sf_dir, "documents")
-    sig = md5_minhash_signature(docs, MINHASH_NUM).select(
-        "doc_id",
-        *[F.element_at("_sig", i + 1).alias(f"_h{i}") for i in range(MINHASH_NUM)],
-    )
-    per_band = MINHASH_NUM // MINHASH_BANDS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band_id"),
-                F.md5(
-                    F.concat(*[F.col(f"_h{b * per_band + j}") for j in range(per_band)])
-                ).alias("band_hash"),
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.explode(bands).alias("f")).select(
-        "doc_id", F.col("f.band_id").alias("band_id"),
+    bands = minhash_band_hashes("_sig", MINHASH_NUM, MINHASH_BANDS, "md5")
+    return minhash_signature(docs, MINHASH_NUM, "md5").select(
+        "doc_id", F.explode(bands).alias("f")
+    ).select(
+        "doc_id", F.col("f.band_id").cast("long").alias("band_id"),
         F.col("f.band_hash").alias("band_hash"),
     )
 

@@ -1,13 +1,11 @@
-"""Round-5 registry additions: full DuckDB value oracles for the four
-previously rows-only sketch queries (VERDICT r4 next-round #3).
+"""Registry queries with full DuckDB value oracles for the SimHash, MinHash
+LSH-pair and hyperplane-LSH sketches.
 
-Technique = the md5 hash-replay the MinHash band-signature oracle proved
-(queries_episodes.q_minhash_band_signature): swap the engine-specific
-xxhash64 for md5-derived values BOTH engines compute identically, keep the
-operator structure (banding, caps, verification) bit-for-bit. The xxhash64
-operators in operators/dedup.py and ann.py remain the scale path — one
-64-bit hash per token beats an md5 + hex-slice — and stay unit-tested;
-these variants make the same *query semantics* hash-checkable end to end.
+The sketch queries call the same operators the scale path runs
+(operators/dedup.py) with `hash_fn="md5"`: md5-derived hashes both engines
+compute identically, so the oracle checks the operator's banding, bucket
+caps and verification end to end. `hash_fn="xxhash64"` is the same code
+with a cheaper hash (`minhash_lsh_pairs_fast`).
 
 Replay primitives (cross-checked Spark↔DuckDB on fixtures):
   token hash halves:  Spark conv(substring(md5(t),1|9,8),16,10)::long
@@ -67,19 +65,18 @@ sig AS (
 
 
 def q_simhash_fingerprints(spark, sf_dir):
-    """64-bit SimHash (md5 split-half token hashes, one-pass vote
-    aggregate) + bottom-8 md5 fingerprint per document — the replayable
-    variant of dedup.with_simhash + textfns.fingerprint, giving the
-    sketch its full value oracle (was rows-only r1-r4). Null-text docs
-    are excluded on both sides (see _SIMHASH_SIG_CTE note)."""
+    """64-bit SimHash (md5 token hashes, one-pass vote aggregate,
+    dedup.with_simhash) carried as two 32-bit halves, plus the bottom-8
+    md5 fingerprint per document. Null-text docs are excluded on both
+    sides (see _SIMHASH_SIG_CTE note)."""
     from inspectehr_spark.tables import parallel_scan
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    # r7: parallelize the one-file scan before the per-row sketch math
-    # (tables.parallel_scan) — the vote accumulator and the bottom-8 md5
-    # fingerprint are unchanged, they just no longer run on a single core
-    out = dedup.with_simhash_replayable(
-        parallel_scan(docs.select("doc_id", "text")), text_col="text"
+    # parallelize the one-file scan before the per-row sketch math
+    # (tables.parallel_scan)
+    out = dedup.with_simhash(
+        parallel_scan(docs.select("doc_id", "text")), text_col="text",
+        hash_fn="md5",
     )
     staged = out.withColumn(
         "_md5", F.transform(F.split(F.col("text"), r"\s+"), lambda t: F.md5(t))
@@ -87,7 +84,12 @@ def q_simhash_fingerprints(spark, sf_dir):
     fp = F.md5(
         F.concat_ws(",", F.slice(F.array_sort(F.col("_md5")), 1, 8))
     )
-    return staged.select("doc_id", "fp_hi", "fp_lo", fp.alias("fingerprint"))
+    return staged.select(
+        "doc_id",
+        F.shiftrightunsigned("simhash", 32).alias("fp_hi"),
+        F.col("simhash").bitwiseAND(F.lit(0xFFFFFFFF)).alias("fp_lo"),
+        fp.alias("fingerprint"),
+    )
 
 
 SQL_SIMHASH_FINGERPRINTS = f"""
@@ -104,7 +106,7 @@ FROM sig s JOIN fp f USING (doc_id)
 
 
 # --------------------------------------------------------------------------
-# simhash_hamming_pairs — banded near-dup pairs over the replayable simhash
+# simhash_hamming_pairs — banded near-dup pairs over the md5 simhash
 # --------------------------------------------------------------------------
 
 _SH_CHUNKS, _SH_MAXHAM, _SH_CAP = 16, 14, 64
@@ -112,14 +114,15 @@ _SH_CHUNKS, _SH_MAXHAM, _SH_CAP = 16, 14, 64
 
 def q_simhash_hamming_pairs(spark, sf_dir):
     """SimHash banded near-dup pairs (pigeonhole banding + exact bit_count
-    verify) over the replayable md5 split-half fingerprint — full value
-    oracle (was rows-only r4). Threshold loosened as before: the corpus
+    verify, dedup.simhash_hamming_pairs) over the md5 fingerprint — full
+    value oracle. Threshold loosened as before: the corpus
     has no planted near-dups; operator exactness with constructed
     near-dups stays unit-tested in tests/test_operators.py. Null-text
     docs are excluded on both sides (see _SIMHASH_SIG_CTE note)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    pairs = dedup.simhash_hamming_pairs_replayable(
-        docs, max_hamming=_SH_MAXHAM, chunks=_SH_CHUNKS, bucket_cap=_SH_CAP
+    pairs = dedup.simhash_hamming_pairs(
+        docs, max_hamming=_SH_MAXHAM, chunks=_SH_CHUNKS, bucket_cap=_SH_CAP,
+        hash_fn="md5",
     )
     return pairs.select(
         "doc_id_a", "doc_id_b", F.col("hamming").cast("long").alias("hamming")
@@ -175,80 +178,17 @@ _MH_PER_BAND = _MH_NUM // _MH_BANDS
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
-    """MinHash+LSH near-duplicate candidate pairs with FULL value oracle
-    (was rows-only r1-r4): the md5 band-signature replay
-    (q_minhash_band_signature) extended through the banded self-join,
-    hot-bucket cap and signature-agreement verification of
-    dedup.minhash_lsh_duplicates — same 32-hash / 16-band sketch as the
-    r1-r4 registry query. est_jaccard = agreeing elements / 32 — exact
+    """MinHash+LSH near-duplicate candidate pairs with FULL value oracle:
+    dedup.minhash_lsh_duplicates with md5 hashes — banded self-join,
+    hot-bucket cap and signature-agreement verification, 32-hash /
+    16-band sketch. est_jaccard = agreeing elements / 32 — exact
     multiples of 1/32 (2^-5), binary-representable, so the hash compare
-    is ulp-safe. Threshold 0.5 as before (the corpus plants exact dups,
-    not near-dups; constructed-near-dup exactness stays unit-tested)."""
+    is ulp-safe. Threshold 0.5 (the corpus plants exact dups, not
+    near-dups; constructed-near-dup exactness stays unit-tested)."""
     docs = _t(spark, sf_dir, "documents")
-    # r7: persist the signature table (sketch-sized: one 32-element md5
-    # array per doc) so the md5 construction runs ONCE — the r5 shape
-    # recomputed the full signature subplan under BOTH sides of the banded
-    # self-join (the b side sat under a BroadcastExchange, so no exchange
-    # reuse fired). The heavy _sig arrays also no longer ride through the
-    # band explode / window / join: pairs are decided on (doc_id, band)
-    # alone and the two signatures join back by id for the agreement count.
-    sig = dedup.md5_minhash_signature(docs, _MH_NUM).persist()
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "",
-                        F.slice(F.col("_sig"), b * _MH_PER_BAND + 1, _MH_PER_BAND),
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(_MH_BANDS)
-        ]
-    )
-    banded = sig.select(
-        "doc_id", F.explode(bands).alias("f")
-    ).select("doc_id", "f.band_id", "f.band_hash")
-    from pyspark.sql import Window
-
-    wb = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
-    banded = banded.withColumn("_rn", F.row_number().over(wb)).filter(
-        F.col("_rn") <= _MH_CAP
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("_sig").alias("_sa")
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("_sig").alias("_sb")
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda eq: eq
-            )
-        )
-        / F.lit(_MH_NUM)
-    ).alias("est_jaccard")
-    return (
-        pairs.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .select("doc_id_a", "doc_id_b", est)
-        .filter(F.col("est_jaccard") >= _MH_THRESHOLD)
+    return dedup.minhash_lsh_duplicates(
+        docs, num_hashes=_MH_NUM, bands=_MH_BANDS,
+        jaccard_threshold=_MH_THRESHOLD, bucket_cap=_MH_CAP, hash_fn="md5",
     )
 
 

@@ -131,14 +131,12 @@ GROUP BY host, registered_domain
 
 
 def q_minhash_lsh_pairs_fast(spark, sf_dir):
-    """The xxhash64 MinHash scale path, re-registered so BENCH tracks the
-    plan a 100x deployment actually runs (VERDICT r5 next-round #5): the
-    registry's `minhash_lsh_pairs` is the md5 oracle-replay variant (~2x
-    the hash work - md5 + hex-slice per gram vs one 64-bit xxhash64).
-    Same query semantics and 32-hash/16-band sketch geometry, same
-    threshold and hot-bucket cap; operators/dedup.minhash_lsh_duplicates
-    end to end. Rows-only driver check (xxhash64 has no DuckDB replay);
-    pair-set parity vs the md5 variant is asserted in
+    """`minhash_lsh_pairs` with the xxhash64 hash family: the same
+    operator (dedup.minhash_lsh_duplicates), 32-hash/16-band sketch
+    geometry, threshold and hot-bucket cap, with one 64-bit hash per gram
+    instead of an md5 + hex-slice — the plan a deployment runs. No DuckDB
+    oracle (xxhash64 has no DuckDB replay); pair-set parity vs the
+    md5 query is asserted in
     tests/test_operators.py::test_minhash_fast_path_matches_md5_variant."""
     from inspectehr_spark.operators import dedup
 

@@ -84,7 +84,8 @@ FROM documents d LEFT JOIN scored s USING (doc_id)
 
 def q_substring_dup_spans(spark, sf_dir):
     """Cross-document verbatim-span flags: 64-char windows at hop 32,
-    md5-keyed (the oracle-replay hash; xxhash64 is the deployment twin).
+    md5-keyed (the oracle-replay hash; `hash_fn="xxhash64"` is the
+    deployment hash).
     The sf0.01 fixture's near-dup docs share 170 aligned windows, so the
     verdict column carries real signal, and its min n_chars is 48, so the
     len<window empty branch is exercised too."""

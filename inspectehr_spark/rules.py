@@ -3,10 +3,10 @@
 The reference drives its battery from a 255-row DQ-reference CSV with a
 `ranges` string column like "[0, 100]" / "(0, Inf)" parsed per call
 (`parse_range`, reference R/utils.R:377-433) plus a `possible_values`
-list-column (R/evaluate_ranges.R:105-187). We parse ranges ONCE on the
-driver into (lo, hi, lo_incl, hi_incl) and ship the whole rules table to
-executors as a broadcast DataFrame / plain dict — it is tiny, the fact
-table never shuffles for it.
+list-column (R/evaluate_ranges.R:105-187). We parse ranges ONCE into
+(lo, hi, lo_incl, hi_incl); the checks compile each rule to a
+column predicate (operators/checks.py), so the rules never become a
+table and the fact table never shuffles for them.
 """
 
 from __future__ import annotations
@@ -14,12 +14,6 @@ from __future__ import annotations
 import math
 import re
 from dataclasses import dataclass, field
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, BooleanType, DoubleType, StringType, StructField, StructType,
-)
 
 _RANGE_RE = re.compile(
     r"^\s*([\[\(])\s*(-?(?:\d+\.?\d*|Inf|inf))\s*,\s*(-?(?:\d+\.?\d*|Inf|inf))\s*([\]\)])\s*$"
@@ -79,42 +73,6 @@ class Rule:
         lo, hi, li, hi_i = parse_range(ranges)
         return cls(check_code, eval_code, description,
                    lo=lo, hi=hi, lo_incl=li, hi_incl=hi_i, **kw)
-
-
-RULES_SCHEMA = StructType([
-    StructField("check_code", StringType()),
-    StructField("eval_code", StringType()),
-    StructField("description", StringType()),
-    StructField("column", StringType()),
-    StructField("lo", DoubleType()),
-    StructField("hi", DoubleType()),
-    StructField("lo_incl", BooleanType()),
-    StructField("hi_incl", BooleanType()),
-    StructField("possible_values", ArrayType(StringType())),
-    StructField("pattern", StringType()),
-    StructField("not_equals_column", StringType()),
-    StructField("flag", BooleanType()),
-    StructField("ts_lo", StringType()),
-    StructField("ts_hi", StringType()),
-    StructField("periodicity_lo", DoubleType()),
-    StructField("periodicity_hi", DoubleType()),
-])
-
-
-def rules_df(spark: SparkSession, rules: list[Rule]):
-    """Materialize rules as a broadcast-hinted DataFrame (dimension side of
-    every rules join)."""
-    rows = [
-        (
-            r.check_code, r.eval_code, r.description, r.column,
-            float(r.lo), float(r.hi), r.lo_incl, r.hi_incl,
-            list(r.possible_values), r.pattern,
-            r.not_equals_column, r.flag, r.ts_lo, r.ts_hi,
-            float(r.periodicity_lo), float(r.periodicity_hi),
-        )
-        for r in rules
-    ]
-    return F.broadcast(spark.createDataFrame(rows, RULES_SCHEMA))
 
 
 # ---------------------------------------------------------------------------

@@ -121,22 +121,3 @@ def _warm(spark: SparkSession) -> None:
         "overwrite"
     ).save()
     spark.conf.set("spark.inspectehr.warmed", "true")
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the driver-generated parquet tables as temp views and return
-    them as a dict of DataFrames. Lazy — no scan happens here.
-    """
-    if names is None:
-        names = (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        )
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -414,10 +414,12 @@ def _near_dup_commit_batch(
     only — the documented recall trade every capped band join makes; the
     index itself is written UNCAPPED so history stays complete.
 
-    The streaming twin of the batch MinHash+LSH path
-    (operators/dedup.minhash_lsh_duplicates): the snapshot root carries
-    the BAND INDEX as history — table 'bands'(band_id, band_hash, _nd_id)
-    and table 'sigs'(_nd_id, _nd_sig) — so a batch document is a near-dup
+    The streaming form of the batch MinHash+LSH path
+    (operators/dedup.minhash_lsh_duplicates; same signature and band
+    keys, dedup.minhash_signature / minhash_band_hashes with xxhash64):
+    the snapshot root carries the BAND INDEX as history — table
+    'bands'(band_id, band_hash, _nd_id) and table 'sigs'(_nd_id, _nd_sig)
+    — so a batch document is a near-dup
     when it shares a band with a committed survivor AND the signature
     agreement fraction >= `jaccard_threshold` (exact same banded-candidate
     → verify semantics as batch; band collisions alone never drop a doc).
@@ -439,8 +441,8 @@ def _near_dup_commit_batch(
     keyed equi-join; persist the history 'bands' table bucketed by
     band_hash at 10^12-doc scale so the join is storage-partitioned."""
     from inspectehr_spark.operators.dedup import (
-        with_minhash_signature,
-        with_shingles,
+        minhash_band_hashes,
+        minhash_signature,
     )
     from inspectehr_spark.sources import snapshots as snap
 
@@ -448,31 +450,17 @@ def _near_dup_commit_batch(
 
     if _replayed(snap.latest_extra(root), ingest_id, batch_id):
         return 0
-    rows_per_band = num_hashes // bands
     spark = batch_df.sparkSession
 
-    # persist: the shingle + num_hashes×xxhash64 signature pass is the
-    # dominant per-batch cost, and it feeds FOUR consumers (history join,
-    # both sides of the within-batch self-join, kept survivor signatures)
-    # — uncached it would recompute per consumer.
-    sigs = with_minhash_signature(
-        with_shingles(batch_df.select(F.col(id_col).alias("_nd_id"), text_col),
-                      text_col=text_col),
-        num_hashes=num_hashes,
-    ).filter(F.size("shingles") > 0).select(
-        "_nd_id", F.col("sig").alias("_nd_sig")
-    ).persist()
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    F.slice(F.col("_nd_sig"), b * rows_per_band + 1, rows_per_band)
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
+    # persist: the num_hashes×xxhash64 signature pass is the dominant
+    # per-batch cost, and it feeds FOUR consumers (history join, both
+    # sides of the within-batch self-join, kept survivor signatures) —
+    # uncached it would recompute per consumer.
+    sigs = minhash_signature(
+        batch_df.select(F.col(id_col).alias("_nd_id"), text_col),
+        num_hashes, "xxhash64", text_col=text_col, id_col="_nd_id",
+    ).select("_nd_id", F.col("_sig").alias("_nd_sig")).persist()
+    band_arr = minhash_band_hashes("_nd_sig", num_hashes, bands, "xxhash64")
     banded = sigs.select(
         "_nd_id", "_nd_sig", F.explode(band_arr).alias("b")
     ).select("_nd_id", "_nd_sig", "b.band_id", "b.band_hash")

@@ -129,19 +129,27 @@ def test_drift_flags(spark):
 
 # --- dedup: minhash near-dup on constructed docs ------------------------------
 
-def test_minhash_finds_constructed_near_dups(spark):
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_minhash_finds_constructed_near_dups(spark, hash_fn):
+    """Both hash families find the same pairs: the near-dup, and a copy of
+    it with doubled spaces (the tokenizer drops empty tokens, so the copy
+    is the same doc); a 2-token doc has no 3-grams and never pairs."""
     base = " ".join(f"w{i}" for i in range(200))
     near = " ".join(f"w{i}" for i in range(195)) + " x1 x2 x3 x4 x5"
     far = " ".join(f"z{i}" for i in range(200))
     df = spark.createDataFrame(
-        [(1, base), (2, near), (3, far)], "doc_id long, text string"
+        [(1, base), (2, near), (3, far), (4, "w0 w1"), (5, near.replace(" ", "  "))],
+        "doc_id long, text string",
     )
-    pairs = dedup.minhash_lsh_duplicates(
-        df, num_hashes=64, bands=16, jaccard_threshold=0.5
-    ).collect()
-    assert len(pairs) == 1
-    assert (pairs[0]["doc_id_a"], pairs[0]["doc_id_b"]) == (1, 2)
-    assert pairs[0]["est_jaccard"] >= 0.5
+    pairs = {
+        (r["doc_id_a"], r["doc_id_b"]): r["est_jaccard"]
+        for r in dedup.minhash_lsh_duplicates(
+            df, num_hashes=64, bands=16, jaccard_threshold=0.5, hash_fn=hash_fn
+        ).collect()
+    }
+    assert sorted(pairs) == [(1, 2), (1, 5), (2, 5)]
+    assert pairs[(1, 2)] >= 0.5
+    assert pairs[(2, 5)] == 1.0
     # exact verification path agrees
     jac = dedup.ngram_jaccard_pairs(
         df, spark.createDataFrame([(1, 2)], "doc_id_a long, doc_id_b long")
@@ -150,14 +158,30 @@ def test_minhash_finds_constructed_near_dups(spark):
     assert jac == pytest.approx(193 / 203, abs=1e-6)
 
 
-def test_simhash_close_for_near_dups(spark):
+def test_dedup_sketches_reject_unknown_hash_fn(spark):
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="hash_fn"):
+        dedup.minhash_lsh_duplicates(df, hash_fn="sha1")
+    with pytest.raises(ValueError, match="hash_fn"):
+        dedup.with_simhash(df, hash_fn="sha1")
+    with pytest.raises(ValueError, match="hash_fn"):
+        dedup.simhash_hamming_pairs(df, hash_fn="sha1")
+    with pytest.raises(ValueError, match="hash_fn"):
+        dedup.substring_dup_stats(df, hash_fn="sha1")
+
+
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_simhash_close_for_near_dups(spark, hash_fn):
     base = " ".join(f"w{i}" for i in range(100))
     near = " ".join(f"w{i}" for i in range(99)) + " different"
     far = " ".join(f"z{i}" for i in range(100))
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, far)], "doc_id long, text string"
     )
-    out = {r["doc_id"]: r["sh"] for r in dedup.with_simhash(df, out_col="sh").collect()}
+    out = {
+        r["doc_id"]: r["sh"]
+        for r in dedup.with_simhash(df, out_col="sh", hash_fn=hash_fn).collect()
+    }
 
     def hamming(a, b):
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")
@@ -232,7 +256,8 @@ def test_global_and_local_missingness(spark):
     assert [(r["site"], str(r["month_start"])) for r in local] == [("s1", "2024-02-01")]
 
 
-def test_simhash_hamming_pairs(spark):
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_simhash_hamming_pairs(spark, hash_fn):
     """Constructed near-dups: one token changed in a 40-token doc flips few
     simhash bits → pair found; an unrelated doc does not pair."""
     base = " ".join(f"tok{i}" for i in range(40))
@@ -243,7 +268,9 @@ def test_simhash_hamming_pairs(spark):
     )
     pairs = {
         (r["doc_id_a"], r["doc_id_b"]): r["hamming"]
-        for r in dedup.simhash_hamming_pairs(df, max_hamming=12, chunks=16).collect()
+        for r in dedup.simhash_hamming_pairs(
+            df, max_hamming=12, chunks=16, hash_fn=hash_fn
+        ).collect()
     }
     assert (1, 2) in pairs
     assert all(p == (1, 2) for p in pairs)
@@ -954,6 +981,29 @@ def test_minhash_fast_path_matches_md5_variant(spark, sf_dir):
     mp = sorted((r["doc_id_a"], r["doc_id_b"]) for r in md5v.collect())
     assert len(fp) > 0
     assert fp == mp
+
+
+def test_sketch_queries_leave_no_cached_data(spark, sf_dir):
+    """A registry query must leave no persisted RDD behind in a
+    long-lived session: the dedup sketch queries build, join and verify
+    without a cache the caller would have to release."""
+    from inspectehr_spark.queries import QUERIES
+
+    jsc = spark.sparkContext._jsc
+    # the session is shared: only RDDs persisted by these queries count
+    before = set(jsc.getPersistentRDDs().keys())
+    for name in (
+        "simhash_fingerprints",
+        "simhash_hamming_pairs",
+        "minhash_band_signature",
+        "minhash_lsh_pairs",
+        "minhash_lsh_pairs_fast",
+        "ngram_jaccard_adjacent",
+    ):
+        QUERIES[name][0](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        assert set(jsc.getPersistentRDDs().keys()) <= before, name
 
 
 def test_semantic_dedup_known_answer(spark):
